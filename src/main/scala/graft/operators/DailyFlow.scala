@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.time.LocalDate
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,24 +11,32 @@ import graft.sources.IngestionEngine
  * (reference: motor_ingesta/flujo_diario.py:27-74).
  *
  * Per daily file: ingest (flatten + coerce) → UTC enrich → detect the
- * file's date from the data (`first()`, single-date-file contract) →
- * read the previous day's partition of the output table (table missing
- * ⇒ no previous data; table present but partition empty ⇒ the union
- * path still runs, faithfully preserving the reference's semantics) →
- * `unionByName(allowMissingColumns)` so yesterday's rows (which carry
- * `_next` columns) and today's (which don't) align → materialize to a
- * provisional table (a lineage barrier: the final write overwrites a
- * table the plan would otherwise still be reading) → recompute
- * next-flight intervals over the stitched 2-day frame, fixing
- * yesterday's boundary NULLs → dynamic-partition-overwrite only the
- * affected `FlightDate` partitions → drop the provisional table.
+ * file's date from the data (`head(1)`, single-date-file contract; a
+ * frame with no rows writes nothing) → if the output table exists,
+ * read its previous-day partition and `unionByName(allowMissingColumns)`
+ * so yesterday's rows (which carry `_next` columns) and today's (which
+ * don't) align (a present-but-empty partition still takes the union
+ * path, faithfully preserving the reference's semantics) → recompute
+ * next-flight intervals over the stitched frame, fixing yesterday's
+ * boundary NULLs → overwrite only the affected `FlightDate` partitions.
+ *
+ * One write path: the first day creates the table with the
+ * `partitionOverwriteMode=dynamic` option, which the table keeps in its
+ * `OPTIONS`; every later day `insertInto`s it and Spark applies dynamic
+ * overwrite from there, without touching the session's conf. The
+ * stitched frame reads the very table it overwrites, and that is safe
+ * only in dynamic mode: Spark writes the new partitions to a staging
+ * directory and swaps them in at job commit, after every read has
+ * finished, so the reference's provisional stitch table
+ * (flujo_diario.py:52-53) is not needed. A table created without the
+ * option (static mode) fails the insert's analysis with
+ * `UNSUPPORTED_OVERWRITE.TABLE`; it is never truncated.
  *
  * Scale: the previous-day read is partition-pruned; the stitch frame is
- * ≤2 days regardless of table size; the final write repartitions by the
- * partition column for file-count control and — once the table exists —
- * goes through `insertInto` with dynamic partition overwrite, so only
- * the 1–2 affected `FlightDate` partitions are replaced and all older
- * partitions survive. (`saveAsTable(mode=overwrite)` would drop and
+ * ≤2 days regardless of table size; the write repartitions by the
+ * partition column for file-count control and replaces only the 1–2
+ * affected partitions, so all older partitions survive.
+ * (`saveAsTable(mode=overwrite)` on an existing table would drop and
  * recreate the WHOLE table regardless of partitionOverwriteMode — a
  * latent data-loss bug in the reference's flujo_diario.py:60-68 that
  * this rebuild deliberately fixes; guarded by the 3-day retention
@@ -38,8 +44,9 @@ import graft.sources.IngestionEngine
  */
 class DailyFlow(val config: EngineConfig) {
 
-  private val engine = new IngestionEngine(config)
-  private val ProvisionalTable = "tabla_provisional"
+  /** The flow's ingestion (scan → flatten → coerce), shared with the
+    * streaming skin. */
+  val engine = new IngestionEngine(config)
 
   /** Process one daily JSON file end-to-end into the output table. */
   def processDaily(spark: SparkSession, dataFile: String): Unit =
@@ -55,70 +62,47 @@ class DailyFlow(val config: EngineConfig) {
   def processIngested(spark: SparkSession, frame0: DataFrame): Unit = {
     val ingested = frame0.cache()
     val withUtc = Enrich.addUtcTime(ingested, Enrich.loadTimezones(spark))
+    val out = config.outputTable
 
     // Action #1: day detection from the data itself (single-date-file
     // contract — reference: flujo_diario.py:40-41).
-    val today = withUtc.select("FlightDate").head().getDate(0).toLocalDate
-    val prevDay = today.minusDays(1)
+    for (first <- withUtc.select("FlightDate").head(1)) {
+      val prevDay = first.getDate(0).toLocalDate.minusDays(1)
+      val exists = spark.catalog.tableExists(out)
 
-    val previous: Option[DataFrame] = readPreviousDay(spark, prevDay)
+      // Previous-day partition scan; table missing ⇒ no previous data
+      // (reference: flujo_diario.py:43-47).
+      val frame =
+        if (!exists) withUtc
+        else spark.read.table(out)
+          .where(col("FlightDate") === lit(java.sql.Date.valueOf(prevDay)))
+          .unionByName(withUtc, allowMissingColumns = true)
 
-    val frame = previous match {
-      case Some(prev) =>
-        val unioned = prev.unionByName(withUtc, allowMissingColumns = true)
-        // Materialization barrier (reference: flujo_diario.py:52-53).
-        unioned.write.mode("overwrite").saveAsTable(ProvisionalTable)
-        spark.read.table(ProvisionalTable)
-      case None => withUtc
-    }
+      // Reference schema parity: the lead-carrier column is named
+      // `Airline_next` (agregaciones.py:72).
+      val withIntervals = Enrich
+        .addIntervals(frame, carrierNextCol = Some("Airline_next"))
+        .repartition(config.outputPartitions, col("FlightDate"))
 
-    // Reference schema parity: the lead-carrier column is named
-    // `Airline_next` (agregaciones.py:72).
-    val withIntervals = Enrich
-      .addIntervals(frame, carrierNextCol = Some("Airline_next"))
-      .repartition(config.outputPartitions, col("FlightDate"))
-
-    val out = config.outputTable
-    if (spark.catalog.tableExists(out)) {
-      // Dynamic overwrite replaces ONLY the partitions present in the
-      // frame. insertInto ignores writer options (V1 catalog path), so
-      // the session conf governs — set it for this write, restoring
-      // the caller's value after. insertInto is position-based, so
-      // align to the table's column order (partition column last).
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = spark.conf.getOption(modeKey)
-      spark.conf.set(modeKey, "dynamic")
-      try {
-        val tableCols = spark.table(out).columns.toIndexedSeq
+      if (exists) {
+        // insertInto is position-based: align to the table's column
+        // order (partition column last).
         withIntervals
-          .select(tableCols.map(col): _*)
+          .select(spark.table(out).columns.toIndexedSeq.map(col): _*)
           .write.mode("overwrite")
           .insertInto(out)
-      } finally prevMode match {
-        case Some(v) => spark.conf.set(modeKey, v)
-        case None    => spark.conf.unset(modeKey)
+      } else {
+        withIntervals
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("FlightDate")
+          .saveAsTable(out)
       }
-    } else {
-      withIntervals
-        .write.mode("overwrite")
-        .partitionBy("FlightDate")
-        .saveAsTable(out)
+
+      // Dynamic overwrite replaces partition files in place; invalidate
+      // any cached file listings other readers of the table may hold.
+      spark.catalog.refreshTable(out)
     }
-
-    // Dynamic overwrite replaces partition files in place; invalidate
-    // any cached file listings other readers of the table may hold.
-    spark.catalog.refreshTable(out)
-
-    spark.sql(s"DROP TABLE IF EXISTS $ProvisionalTable")
     ingested.unpersist()
   }
-
-  /** Previous-day partition scan; table-missing ⇒ None
-    * (reference: flujo_diario.py:43-47). */
-  private def readPreviousDay(
-      spark: SparkSession, prevDay: LocalDate): Option[DataFrame] =
-    if (!spark.catalog.tableExists(config.outputTable)) None
-    else Some(
-      spark.read.table(config.outputTable)
-        .where(col("FlightDate") === lit(java.sql.Date.valueOf(prevDay))))
 }

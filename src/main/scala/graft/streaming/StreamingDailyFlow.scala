@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.StructType
 
 import graft.config.EngineConfig
 import graft.operators.{DailyFlow, Flatten}
-import graft.sources.IngestionEngine
 
 /**
  * Structured Streaming skin over the daily flow: the landing
@@ -22,8 +21,16 @@ import graft.sources.IngestionEngine
  * processed" bookkeeping, while cross-batch state stays where the
  * batch design put it — in the output table's previous-day
  * partition. `maxFilesPerTrigger=1` preserves the single-date-file
- * contract (day detection via `first()`); micro-batches execute
+ * contract (day detection from the first row); micro-batches execute
  * serially, so day N's write lands before day N+1 reads it.
+ *
+ * Each micro-batch reads the output table it overwrites. That is safe
+ * because the table was created in dynamic partition-overwrite mode:
+ * Spark stages the new partitions and swaps them in at job commit,
+ * after the read. A table created without that option fails the
+ * micro-batch with `UNSUPPORTED_OVERWRITE.TABLE` and is not truncated.
+ * A micro-batch with no rows after flattening (every array empty) is
+ * a no-op in the core, so the stream runs on past it.
  *
  * Scale: identical plans to the batch path (the stream adds only
  * file discovery); state growth is bounded by the checkpoint's file
@@ -32,7 +39,6 @@ import graft.sources.IngestionEngine
 class StreamingDailyFlow(val config: EngineConfig) {
 
   private val flow = new DailyFlow(config)
-  private val engine = new IngestionEngine(config)
 
   /**
    * Start the stream over `landingDir`. `inputSchema` is the RAW
@@ -56,10 +62,8 @@ class StreamingDailyFlow(val config: EngineConfig) {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val ingested = engine.coerce(Flatten.flatten(batch))
-          flow.processIngested(batch.sparkSession, ingested)
-        }
+        flow.processIngested(batch.sparkSession,
+          flow.engine.coerce(Flatten.flatten(batch)))
       }
       .start()
   }

@@ -67,10 +67,18 @@ class DailyFlowSpec extends AnyFunSuite {
     val flow = new DailyFlow(cfg3)
     def day(n: Int, dep: Int) = writeDay(s"d$n.json", Seq(
       s"""{"FlightDate": "2024-03-0$n", "Reporting_Airline": "AA", "Origin": "JFK", "DepTime": $dep}"""))
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val sessionMode = spark.conf.get(modeKey)
 
     flow.processDaily(spark, day(1, 900))
     flow.processDaily(spark, day(2, 1000))
     flow.processDaily(spark, day(3, 1100))
+
+    // The table carries dynamic overwrite in its own options; the
+    // session's setting is never touched.
+    val ddl = spark.sql("SHOW CREATE TABLE flights_test3").head().getString(0)
+    assert(ddl.contains("'partitionOverwriteMode' = 'dynamic'"), ddl)
+    assert(spark.conf.get(modeKey) === sessionMode)
 
     val table = spark.read.table("flights_test3")
     // Day 3 stitches days 2+3 only; day 1's partition must SURVIVE —
@@ -87,6 +95,42 @@ class DailyFlowSpec extends AnyFunSuite {
     assert(d1.getAs[Long]("diff_next") === 90000L) // 09:00 -> next day 10:00 EST = 25h
 
     spark.sql("DROP TABLE IF EXISTS flights_test3")
+  }
+
+  test("a user table named tabla_provisional survives the daily flow") {
+    // The reference's provisional stitch table (flujo_diario.py:52-53)
+    // is not reproduced: no name in the current database is borrowed.
+    spark.sql("DROP TABLE IF EXISTS tabla_provisional")
+    spark.range(3).toDF("id").write.saveAsTable("tabla_provisional")
+    val flow = new DailyFlow(cfg.copy(output_table = Some("flights_test_clash")))
+    flow.processDaily(spark, writeDay("d1.json", Seq(
+      """{"FlightDate": "2024-03-01", "Reporting_Airline": "AA", "Origin": "JFK", "DepTime": 900}""")))
+    flow.processDaily(spark, writeDay("d2.json", Seq(
+      """{"FlightDate": "2024-03-02", "Reporting_Airline": "UA", "Origin": "JFK", "DepTime": 800}""")))
+
+    assert(spark.catalog.tableExists("tabla_provisional"))
+    val ids = spark.table("tabla_provisional").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids === Seq(0L, 1L, 2L))
+    assert(spark.table("flights_test_clash").count() === 2)
+    spark.sql("DROP TABLE IF EXISTS flights_test_clash")
+    spark.sql("DROP TABLE IF EXISTS tabla_provisional")
+  }
+
+  test("a table created without dynamic overwrite fails loudly, not truncated") {
+    val src = new DailyFlow(cfg.copy(output_table = Some("flights_test_src")))
+    src.processDaily(spark, writeDay("d1.json", Seq(
+      """{"FlightDate": "2024-03-01", "Reporting_Airline": "AA", "Origin": "JFK", "DepTime": 900}""")))
+    spark.table("flights_test_src").write.partitionBy("FlightDate").saveAsTable("flights_test_static")
+
+    val flow = new DailyFlow(cfg.copy(output_table = Some("flights_test_static")))
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      flow.processDaily(spark, writeDay("d2.json", Seq(
+        """{"FlightDate": "2024-03-02", "Reporting_Airline": "UA", "Origin": "JFK", "DepTime": 800}""")))
+    }
+    assert(err.getMessage.contains("UNSUPPORTED_OVERWRITE.TABLE"), err.getMessage)
+    assert(spark.table("flights_test_static").count() === 1)
+    spark.sql("DROP TABLE IF EXISTS flights_test_src")
+    spark.sql("DROP TABLE IF EXISTS flights_test_static")
   }
 
   test("skipped day: table exists but previous partition empty still runs the union path") {

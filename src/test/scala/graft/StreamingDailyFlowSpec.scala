@@ -68,6 +68,40 @@ class StreamingDailyFlowSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS flights_stream_test")
   }
 
+  test("a landing file whose rows all flatten away leaves the table unchanged") {
+    // Origin lands as an array; flattening explodes it, so a file whose
+    // arrays are all empty is a non-empty micro-batch of zero flights.
+    val arraySchema = StructType(Seq(
+      StructField("FlightDate", StringType),
+      StructField("Reporting_Airline", StringType),
+      StructField("Origin", ArrayType(StringType)),
+      StructField("DepTime", LongType)))
+    val landing = Files.createTempDirectory("graft-landing-empty")
+    val checkpoint = Files.createTempDirectory("graft-ckpt-empty").toString
+    val skin = new StreamingDailyFlow(cfg.copy(output_table = Some("flights_stream_empty")))
+    def drain(file: String, body: String): Seq[String] = {
+      Files.writeString(landing.resolve(file), body)
+      skin.start(spark, landing.toString, arraySchema, checkpoint)
+        .awaitTermination()
+      spark.catalog.refreshTable("flights_stream_empty")
+      spark.read.table("flights_stream_empty").collect().map(_.toString).sorted.toSeq
+    }
+
+    val afterDay1 = drain("2024-03-01.json",
+      """{"FlightDate": "2024-03-01", "Reporting_Airline": "AA", "Origin": ["JFK"], "DepTime": 900}""")
+    assert(afterDay1.size === 1)
+    val afterEmpty = drain("2024-03-02.json",
+      """{"FlightDate": "2024-03-02", "Reporting_Airline": "UA", "Origin": [], "DepTime": 800}
+        |{"FlightDate": "2024-03-02", "Reporting_Airline": "DL", "Origin": [], "DepTime": 1200}""".stripMargin)
+    assert(afterEmpty === afterDay1)
+    // The checkpoint moved past the empty file: the next day lands.
+    val afterDay3 = drain("2024-03-03.json",
+      """{"FlightDate": "2024-03-03", "Reporting_Airline": "WN", "Origin": ["JFK"], "DepTime": 700}""")
+    assert(afterDay3.size === 2)
+
+    spark.sql("DROP TABLE IF EXISTS flights_stream_empty")
+  }
+
   test("3-day replay is row-identical to the batch DailyFlow; restart reprocesses nothing") {
     import graft.operators.DailyFlow
     val landing = Files.createTempDirectory("graft-landing3")
